@@ -38,6 +38,7 @@ ROOT = os.getcwd()
 BUILD = os.path.join(ROOT, ".bench_build")
 DATA = os.path.join(HERE, "data", "sf0.01")
 EXPECTED = os.path.join(HERE, "expected_digests.tsv")
+ORACLE_DUMP = os.path.join(BUILD, "oracle_dump")
 WORKLOADS = ("betting_etl", "llm_curation", "push_stream")
 JVM_TIMEOUT_S = 170
 ADD_OPENS = ["java.base/java.lang", "java.base/java.lang.invoke",
@@ -109,6 +110,10 @@ def cores():
     return len(os.sched_getaffinity(0)) if hasattr(os, "sched_getaffinity") else os.cpu_count()
 
 
+# A fixed heap, committed and touched at start (-Xms = -Xmx, AlwaysPreTouch):
+# the heap's share of the resident set is then the same in every run, so
+# peak_rss_mb moves with native memory (RocksDB state, off-heap buffers,
+# threads, code) and retained_mb reports the heap the program keeps alive.
 HEAP_MB = 2048
 
 
@@ -118,9 +123,7 @@ def jvm(classes, main, args, run_dir, log_path):
     env = dict(os.environ, GRAFT_FIXTURE_CACHE_DIR=os.path.join(run_dir, "fixtures"),
                SPARK_LOCAL_DIRS=os.path.join(run_dir, "spark-local"))
     cp = ":".join([classes] + spark_jars())
-    # A fixed heap (-Xms = -Xmx) keeps the resident set from following the
-    # collector's sizing decisions from run to run.
-    cmd = ["java", "-XX:-UsePerfData", f"-Xms{HEAP_MB}m", f"-Xmx{HEAP_MB}m", f"-XX:ActiveProcessorCount={cores()}",
+    cmd = ["java", "-XX:-UsePerfData", f"-Xms{HEAP_MB}m", f"-Xmx{HEAP_MB}m", "-XX:+AlwaysPreTouch", f"-XX:ActiveProcessorCount={cores()}",
            f"-Djava.io.tmpdir={run_dir}/tmp",
            f"-Dlog4j.configurationFile={HERE}/log4j2.properties",
            "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC"]
@@ -158,7 +161,8 @@ def summary(res, trace):
     parts = [res["workload"], f"seed={res['seed']}", f"trace={int(trace)}",
              f"error_rate={fail / att if att else 1.0:.4g}"]
     if not trace:
-        parts += [f"setup_s={m['setup_s']:.3f}s", f"peak_rss_mb={m['peak_rss_mb']:.0f}MB"]
+        parts += [f"setup_s={m['setup_s']:.3f}s", f"peak_rss_mb={m['peak_rss_mb']:.0f}MB",
+                  f"retained_mb={m['retained_mb']:.0f}MB"]
         if res["workload"] == "push_stream":
             sm = s["summary"]
             for rate in ("low", "high"):
@@ -168,6 +172,7 @@ def summary(res, trace):
                     p, v = lat["tail"].split("=")
                     parts.append(f"frame_latency_{p}_ms.{rate}={float(v):.1f}ms")
             parts.append(f"drain_frames_per_s={sm['drain_frames_per_s']:.0f}/s")
+            parts.append(f"backlog_frames.high.max={sm['backlog_frames_high_max']:.0f}")
             parts.append(f"drain_p50_s={m['pass_p50_s']:.3f}s")
         else:
             parts.append(f"pass_p50_s={m['pass_p50_s']:.3f}s")
@@ -199,8 +204,6 @@ def run(ns):
     args = ["--workload", ns.workload, "--seed", str(ns.seed), "--seconds", str(ns.seconds),
             "--trace", str(ns.trace), "--data", DATA, "--run-dir", run_dir, "--out", out,
             "--cores", str(cores()), "--expected", EXPECTED]
-    if ns.dump:
-        args += ["--dump", os.path.abspath(ns.dump)]
     try:
         code = jvm(classes, "perfbench.Main", args, run_dir, log)
     finally:
@@ -225,11 +228,10 @@ def run(ns):
                       "failed": res["failed"], "metrics": metrics}))
 
 
-def record_digests(ns):
+def record_digests():
     """Rewrite the expected digests from the engine as it is now."""
-    dump = os.path.abspath(ns.dump or os.path.join(BUILD, "oracle_dump"))
-    shutil.rmtree(dump, ignore_errors=True)
-    os.makedirs(dump)
+    shutil.rmtree(ORACLE_DUMP, ignore_errors=True)
+    os.makedirs(ORACLE_DUMP)
     rows = []
     for w in ("betting_etl", "llm_curation"):
         classes = build()
@@ -238,7 +240,7 @@ def record_digests(ns):
         out = os.path.join(BUILD, "results", f"record-{w}.json")
         os.makedirs(os.path.dirname(out), exist_ok=True)
         log = out[:-5] + ".log"
-        sub = os.path.join(dump, w)
+        sub = os.path.join(ORACLE_DUMP, w)
         os.makedirs(sub, exist_ok=True)
         args = ["--workload", w, "--seed", "1", "--seconds", "0", "--trace", "0", "--data", DATA,
                 "--run-dir", run_dir, "--out", out, "--cores", str(cores()),
@@ -257,7 +259,7 @@ def record_digests(ns):
         f.write("# query<TAB>schema-md5:rows:sum-of-row-xxhash64 (perfbench/run.py --record-digests)\n")
         for k, v in rows:
             f.write(f"{k}\t{v}\n")
-    print(f"wrote {len(rows)} digests to {EXPECTED}; outputs + oracle_sql.json under {dump}/<workload>")
+    print(f"wrote {len(rows)} digests to {EXPECTED}; outputs + oracle_sql.json under {ORACLE_DUMP}/<workload>")
 
 
 def self_test():
@@ -279,7 +281,6 @@ def main():
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--seconds", type=float, default=10)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--dump", help=argparse.SUPPRESS)
     ap.add_argument("--self-test", action="store_true")
     ap.add_argument("--record-digests", action="store_true")
     ns = ap.parse_args()
@@ -288,7 +289,7 @@ def main():
     if ns.self_test:
         self_test()
     elif ns.record_digests:
-        record_digests(ns)
+        record_digests()
     elif ns.workload:
         run(ns)
     else:

@@ -81,20 +81,24 @@ final class Batch(spark: SparkSession, o: Opts, r: Result, t0: Long, names: Seq[
     }
     val setupS = secs(t0)
     r.samples("setup_s") = setupS
+    // What the program keeps alive after set-up and after each pass, each
+    // read after a full collection outside the timed spans.
+    val retained = mutable.ArrayBuffer(Main.retainedMb())
 
-    // Timed passes until the run's seconds are spent (at least one). A
-    // traced run alternates untraced and traced passes, at least three
+    // Timed passes until the run's seconds are spent, at least two (their
+    // median is reported; one pass alone still carries warm-up). A traced
+    // run alternates untraced and traced passes, at least three
     // (untraced, traced, untraced), so warm-up drift does not bias the
     // tracing overhead.
     trace.foreach(_.install())
     val rng = new scala.util.Random(o.seed)
-    val untimed = mutable.ArrayBuffer.empty[Double]
+    val untraced = mutable.ArrayBuffer.empty[Double]
     val traced = mutable.ArrayBuffer.empty[Double]
     val cpuS = mutable.ArrayBuffer.empty[Double]
     val perPass = mutable.ArrayBuffer.empty[Map[String, Any]]
     val layer = mutable.ArrayBuffer.empty[Map[String, Any]]
     val start = System.nanoTime()
-    val minPasses = if (o.trace) 3 else 1
+    val minPasses = if (o.trace) 3 else 2
     var pass = 0
     while (pass < minPasses || secs(start) < o.seconds) {
       val tracedPass = o.trace && pass % 2 == 1
@@ -112,43 +116,48 @@ final class Batch(spark: SparkSession, o: Opts, r: Result, t0: Long, names: Seq[
       }
       val passS = secs(p0)
       val passCpuS = (Main.cpuNs() - c0) / 1e9
+      retained += Main.retainedMb()
       if (tracedPass) traced += passS
-      else { untimed += passS; cpuS += passCpuS }
+      else { untraced += passS; cpuS += passCpuS }
       perPass += Map("pass" -> pass, "traced" -> tracedPass, "pass_s" -> passS, "cpu_s" -> passCpuS,
         "order" -> order, "query_s" -> times.toMap)
       pass += 1
     }
     trace.foreach(_.uninstall())
     r.samples("passes") = perPass
+    r.samples("retained_mb") = retained
 
     if (!o.trace) {
       r.metric("setup_s", setupS, "s")
-      r.metric("pass_p50_s", Stats.median(untimed.toSeq), "s")
+      r.metric("pass_p50_s", Stats.median(untraced.toSeq), "s")
       r.metric("pass_cpu_s", Stats.median(cpuS.toSeq), "s")
+      r.metric("retained_mb", retained.max, "MB")
     } else {
       trace.foreach(t => r.spans = t.all.map(Trace.spanJson(_, start)))
       r.samples("layer") = layer
       Layers.batch(r, names, layer.toSeq, loads.map(_._2).sum,
-        Stats.median(traced.toSeq), Stats.median(untimed.toSeq))
-      Kernels.measure(spark, r)
+        Stats.median(traced.toSeq), Stats.median(untraced.toSeq))
+      Kernels.measure(spark, r,
+        if (names == LlmCuration) Kernels.TextKernels else Kernels.FrameKernels)
       Layers.zeroStreaming(r)
     }
   }
 
   /** One query with a span around each layer call and the Spark counts of
-    * its execution. */
+    * its execution. Planning is read from the `noop` write's own
+    * QueryExecution (the execution that runs) and taken out of its
+    * execution time. */
   private def runTraced(t: Trace, n: String, pass: Int): Map[String, Any] = {
     val before = t.snapshot()
     val op = s"$n#$pass"
-    val ((b, p, e), root) = t.span(op, "bench", n) { id =>
+    val ((b, e), root) = t.span(op, "bench", n) { id =>
       val (df, b) = t.span(op, "queries", "build", id)(_ => Queries.queries(n)(spark, o.dataDir))
-      val (_, p) = t.span(op, "plans", "executedPlan", id)(_ => Trace.queryExecution(df).executedPlan)
       val (_, e) = t.span(op, "operators", "noop", id)(_ => noop(df))
-      (b, p, e)
+      (b, e)
     }
-    val c = t.snapshot() - before
+    val c = (t.snapshot() - before).toMap
     def dur(s: Span) = (s.endNs - s.startNs) / 1e9
-    Map("query" -> n, "build_s" -> dur(b), "plan_s" -> dur(p), "exec_s" -> dur(e),
-      "total_s" -> dur(root)) ++ c.toMap
+    Map("query" -> n, "build_s" -> dur(b), "exec_s" -> (dur(e) - c("plan_s")),
+      "total_s" -> dur(root)) ++ c
   }
 }

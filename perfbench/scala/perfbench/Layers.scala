@@ -8,6 +8,14 @@ object Layers {
     * workload reports its own queries as well. */
   val BoardQueries: Seq[String] = Batch.LlmCuration
   val Legs: Seq[String] = Seq("market", "odds_stats", "wager")
+  /** Spark counters reported per query as well as per pass, with units.
+    * Spill (0 on every query at this scale) and shuffle read (equal to
+    * shuffle write in local mode) are reported per pass only. */
+  val PerQueryCounts: Seq[(String, String)] = Seq("jobs" -> "count", "stages" -> "count",
+    "tasks" -> "count", "final_exchanges" -> "count", "gc_s" -> "s",
+    "shuffle_write_bytes" -> "bytes")
+  val PerQuerySources: Seq[(String, String)] = Seq("input_records" -> "count",
+    "input_bytes" -> "bytes")
 
   private def num(m: Map[String, Any], k: String): Double = m(k).asInstanceOf[Double]
 
@@ -25,8 +33,12 @@ object Layers {
     (names ++ BoardQueries).distinct.foreach { n =>
       val on = names.contains(n)
       r.metric(s"operators.exec_s.$n", if (on) med(n, "exec_s") else 0.0, "s")
-      r.metric(s"spark.jobs.$n", if (on) first(n, "jobs") else 0.0, "count")
-      r.metric(s"spark.final_exchanges.$n", if (on) first(n, "final_exchanges") else 0.0, "count")
+      PerQueryCounts.foreach { case (k, u) =>
+        r.metric(s"spark.$k.$n", if (!on) 0.0 else if (u == "s") med(n, k) else first(n, k), u)
+      }
+      PerQuerySources.foreach { case (k, u) =>
+        r.metric(s"sources.$k.$n", if (on) first(n, k) else 0.0, u)
+      }
     }
     sparkTotals(r, k => total(k, first), k => total(k, med))
     r.metric("sources.table_load_s", tableLoadS, "s")
@@ -53,8 +65,8 @@ object Layers {
     Seq("queries.build_s", "plans.plan_s", "sources.table_load_s").foreach(r.metric(_, 0.0, "s"))
     BoardQueries.foreach { n =>
       r.metric(s"operators.exec_s.$n", 0.0, "s")
-      r.metric(s"spark.jobs.$n", 0.0, "count")
-      r.metric(s"spark.final_exchanges.$n", 0.0, "count")
+      PerQueryCounts.foreach { case (k, u) => r.metric(s"spark.$k.$n", 0.0, u) }
+      PerQuerySources.foreach { case (k, u) => r.metric(s"sources.$k.$n", 0.0, u) }
     }
   }
 

@@ -60,6 +60,17 @@ object Main {
   def cpuNs(): Long = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     .asInstanceOf[com.sun.management.OperatingSystemMXBean].getProcessCpuTime
 
+  /** Heap in use right after a full collection plus non-heap in use
+    * (metaspace, code cache), in MB: what the program keeps alive at this
+    * point, without the garbage the collector has not reclaimed yet. The
+    * collection itself takes a fraction of a second; callers keep it out
+    * of every timed span. */
+  def retainedMb(): Double = {
+    System.gc()
+    val m = java.lang.management.ManagementFactory.getMemoryMXBean
+    (m.getHeapMemoryUsage.getUsed + m.getNonHeapMemoryUsage.getUsed) / (1024.0 * 1024.0)
+  }
+
   /** Peak resident set (VmHWM) of this process, in MB. */
   def peakRssMb(): Double =
     scala.io.Source.fromFile("/proc/self/status").getLines()

@@ -84,9 +84,8 @@ final class FrameLogs(val marketPath: String, val commandPath: String, content: 
 /** The open-loop load generator: frames arrive as a seeded Poisson process
   * at a fixed rate per phase, whatever the engine is doing. A frame's
   * stamp is the time it was due; `late` records how far behind its due
-  * time each frame was actually written. `sleep` is the wait primitive. */
-final class Generator(logs: FrameLogs, seed: Long, clock: () => Long,
-    sleep: Long => Unit = ns => java.util.concurrent.locks.LockSupport.parkNanos(ns)) {
+  * time each frame was actually written. */
+final class Generator(logs: FrameLogs, seed: Long, clock: () => Long) {
   // Separate arrival streams per log: the schedule never depends on how
   // the loop happens to interleave the two logs' writes.
   private val mrng = new scala.util.Random(seed ^ 0x5eed)
@@ -125,7 +124,7 @@ final class Generator(logs: FrameLogs, seed: Long, clock: () => Long,
       }
       if (wrote) logs.flush()
       val wait = math.min(nextM, nextC) - clock()
-      if (wait > 0) sleep(math.min(wait, 2000000L))
+      if (wait > 0) java.util.concurrent.locks.LockSupport.parkNanos(math.min(wait, 2000000L))
     }
     end
   }
@@ -138,10 +137,19 @@ object Push {
   val Watermark = "2 seconds"
   /** Offered market-frame rates (frames/s); commands add a tenth. `low`
     * leaves micro-batches small, so their fixed cost sets latency; `high`
-    * makes per-frame decode the larger share while staying below drain
-    * capacity. */
+    * makes per-frame decode the larger share while staying below what the
+    * live legs sustain (their backlog stays flat through the phase). */
   val LowRate = 200.0
   val HighRate = 8000.0
+  /** Each rate runs for a share of `--seconds` but at least this long, so
+    * every phase spans several micro-batches whatever `--seconds` is. */
+  val LowMinS = 3.0
+  val HighMinS = 6.0
+  /** Frames of the timed phases committed later than this after they were
+    * due count as failures. */
+  val LatencyLimitMs = 15000.0
+  /** The first part of each phase is a transition and is not sampled. */
+  val SkipNs = 500000000L
   val BacklogMarket = 20000
   val DrainBatch = 10000
 
@@ -251,21 +259,21 @@ final class Push(spark: SparkSession, o: Opts, r: Result, t0: Long) {
     val content = new FrameContent(o.seed)
     val trace = if (o.trace) Some(new Trace(spark)) else None
     val backlogLogs = backlog(content)
-    // Set-up: the live legs started on empty logs and run in at the low
-    // rate until each has committed three micro-batches (plans compiled,
-    // state stores created).
     mark("backlog_write")
+    // Set-up: the live legs start on empty logs and run in at the low rate
+    // until each has committed two micro-batches (plans compiled, state
+    // stores created); then the timed low and high phases.
     val liveLogs = newLogs("live", new FrameContent(o.seed + 1))
     val legs = start(liveLogs, Trigger.ProcessingTime(0L), 200000, "live")
     val gen = new Generator(liveLogs, o.seed, () => epochNanos())
-    val lowNs = (o.seconds * 0.6 * 1e9).toLong
-    val highNs = (o.seconds * 0.4 * 1e9).toLong
+    val lowNs = (math.max(o.seconds * 0.6, LowMinS) * 1e9).toLong
+    val highNs = (math.max(o.seconds * 0.4, HighMinS) * 1e9).toLong
     @volatile var genError: Option[Throwable] = None
     @volatile var timedStart = 0L
     val thread = new Thread(() => {
       try {
         val warm = gen.phase(0, LowRate, epochNanos(), 60L * 1000000000L,
-          () => legs.all.forall(q => dataBatches(q).size >= 3))
+          () => legs.all.forall(q => dataBatches(q).size >= 2))
         timedStart = System.nanoTime()
         gen.phase(1, LowRate, warm, lowNs)
         gen.phase(2, HighRate, warm + lowNs, highNs)
@@ -282,13 +290,17 @@ final class Push(spark: SparkSession, o: Opts, r: Result, t0: Long) {
     genError.foreach(e => r.fail(s"generator failed: $e"))
     legs.all.foreach(q => await(q, "live")(q.processAllAvailable()))
     legs.all.foreach(_.stop())
+    // What the program keeps alive after the live part and after each
+    // drain, each read after a full collection outside the timed spans.
+    val retained = mutable.ArrayBuffer(Main.retainedMb())
     mark("live_drain_and_stop")
     val lat = latencies(legs, liveLogs, gen)
+    val behind = backlogs(legs, gen)
 
     // One untimed drain compiles the drain path, then timed drains of the
-    // backlog (at least two, whose median is reported); a traced run
-    // alternates untraced and traced drains, at least three (untraced,
-    // traced, untraced), so warm-up drift does not bias the tracing overhead.
+    // backlog: two, whose median is reported, or in a traced run three,
+    // alternating untraced, traced, untraced, so warm-up drift does not
+    // bias the tracing overhead.
     drain(backlogLogs)
     trace.foreach(_.install())
     val drains = mutable.ArrayBuffer.empty[(Boolean, Double, Double)]
@@ -304,6 +316,7 @@ final class Push(spark: SparkSession, o: Opts, r: Result, t0: Long) {
         else drain(backlogLogs)
       before.foreach(b => counts += trace.get.snapshot() - b)
       drains += ((traced, s, (Main.cpuNs() - c0) / 1e9)); last = Some(l)
+      retained += Main.retainedMb()
     }
     trace.foreach(_.uninstall())
     mark("timed_drains")
@@ -321,11 +334,13 @@ final class Push(spark: SparkSession, o: Opts, r: Result, t0: Long) {
       "max" -> gen.late.max / 1e6, "n" -> gen.late.size)
     r.samples("frames") = Map("backlog" -> frames, "live_market" -> liveLogs.market.size,
       "live_commands" -> liveLogs.commands.size)
+    r.samples("retained_mb") = retained
 
     if (!o.trace) {
       r.metric("setup_s", setupS, "s")
       r.metric("pass_p50_s", drainP50, "s")
       r.metric("pass_cpu_s", Stats.median(untraced.map(_._3).toSeq), "s")
+      r.metric("retained_mb", retained.max, "MB")
     } else {
       trace.foreach(t => r.spans = t.all.map(Trace.spanJson(_, dStart)))
       val first = counts.head.toMap
@@ -335,18 +350,22 @@ final class Push(spark: SparkSession, o: Opts, r: Result, t0: Long) {
         (Stats.median(drains.filter(_._1).map(_._2).toSeq) / drainP50 - 1.0) * 100.0, "%")
       r.metric("bench.generator_late_p99_ms",
         Stats.percentile(gen.late.map(_ / 1e6).toSeq, 99.0).getOrElse(gen.late.max / 1e6), "ms")
-      streamingLayers(legs, liveLogs, gen)
-      Kernels.measure(spark, r)
+      streamingLayers(legs, liveLogs, behind)
+      Kernels.measure(spark, r, Kernels.FrameKernels)
     }
+    val high = behind.filter(_._1 == 2).map(_._3)
     r.samples("summary") = Map(
       "frame_latency_ms" -> lat.map { case (k, (p50, tail)) => k -> Map("p50" -> p50, "tail" -> tail) },
-      "drain_frames_per_s" -> frames / drainP50)
+      "drain_frames_per_s" -> frames / drainP50,
+      "backlog_frames_high_max" -> (if (high.isEmpty) 0.0 else high.max))
   }
 
   /** Per frame of the timed phases: commit time of the batch that read it
     * minus its due time. Returns per rate (p50, highest supported
     * percentile as "pNN=value"), skipping each phase's first half second
-    * of transition. Frames never committed count as failures. */
+    * of transition. Frames never committed, and frames of the timed phases
+    * committed more than [[LatencyLimitMs]] after they were due, count as
+    * failures. */
   private def latencies(legs: Legs, logs: FrameLogs, gen: Generator)
       : Map[String, (Double, String)] = {
     val perPhase = mutable.Map.empty[Int, mutable.ArrayBuffer[Double]]
@@ -358,12 +377,18 @@ final class Push(spark: SparkSession, o: Opts, r: Result, t0: Long) {
         (s.toInt until math.min(e, due.size.toLong).toInt).foreach(i => committed(i) = c)
       }
       val phaseStart = due.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).min }
+      var lost, slow = 0L
       due.indices.foreach { i =>
         val (ph, d) = due(i)
-        if (committed(i) == 0L) r.fail(s"live $what frame $i never committed")
-        else if (ph > 0 && d >= phaseStart(ph) + 500000000L)
-          perPhase.getOrElseUpdate(ph, mutable.ArrayBuffer.empty) += (committed(i) - d) / 1e6
+        val ms = (committed(i) - d) / 1e6
+        if (committed(i) == 0L) lost += 1
+        else if (ph > 0) {
+          if (ms > LatencyLimitMs) slow += 1
+          if (d >= phaseStart(ph) + SkipNs) perPhase.getOrElseUpdate(ph, mutable.ArrayBuffer.empty) += ms
+        }
       }
+      if (lost > 0) r.fail(s"live $what frames never committed", lost)
+      if (slow > 0) r.fail(s"live $what frames over the ${LatencyLimitMs.toInt} ms latency limit", slow)
     }
     collect(legs.market, gen.marketDue.toSeq, "market")
     collect(legs.wager, gen.commandDue.toSeq, "command")
@@ -377,8 +402,29 @@ final class Push(spark: SparkSession, o: Opts, r: Result, t0: Long) {
 
   private def fmtP(p: Double): String = if (p == p.floor) p.toInt.toString else p.toString
 
+  /** The market leg's backlog at each commit of a data batch: frames due
+    * by then minus frames committed, as (phase, seconds into the phase,
+    * frames). Batches of a phase's first half second are left out. Flat
+    * through a phase means the rate is sustained; growth means it is not. */
+  private def backlogs(legs: Legs, gen: Generator): Seq[(Int, Double, Double)] = {
+    val due = gen.marketDue.map(_._2).toArray
+    val phaseStart = gen.marketDue.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).min }
+    val phaseEnd = gen.marketDue.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).max }
+    val out = dataBatches(legs.market).flatMap { p =>
+      val c = commitNs(p)
+      val appended = java.util.Arrays.binarySearch(due, c) match {
+        case i if i >= 0 => i + 1
+        case i => -i - 1
+      }
+      val ph = phaseEnd.collectFirst { case (k, end) if c <= end && c >= phaseStart(k) + SkipNs => k }
+      ph.map(k => (k, (c - phaseStart(k)) / 1e9, (appended - offsets(p)._2).toDouble))
+    }
+    r.samples("backlog_frames") = out.map { case (ph, t, n) => Map("phase" -> ph, "t_s" -> t, "frames" -> n) }
+    out
+  }
+
   /** Streaming per-layer metrics from the live run's progress reports. */
-  private def streamingLayers(legs: Legs, logs: FrameLogs, gen: Generator): Unit = {
+  private def streamingLayers(legs: Legs, logs: FrameLogs, backlog: Seq[(Int, Double, Double)]): Unit = {
     def dur(p: StreamingQueryProgress, k: String): Double =
       p.durationMs.asScala.get(k).map(_.doubleValue).getOrElse(0.0)
     def med(xs: Seq[Double]) = if (xs.isEmpty) 0.0 else Stats.median(xs)
@@ -393,18 +439,8 @@ final class Push(spark: SparkSession, o: Opts, r: Result, t0: Long) {
     r.metric("streaming.planning_ms", med(all.map(dur(_, "queryPlanning"))), "ms")
     r.metric("streaming.commit_ms", med(all.map(p => dur(p, "commitOffsets") + dur(p, "walCommit"))), "ms")
     r.metric("sources.latest_offset_ms", med(all.map(dur(_, "latestOffset"))), "ms")
-    // Backlog: frames due by each market batch's commit, minus frames it
-    // had committed; the maximum over the run.
-    val due = gen.marketDue.map(_._2).toArray
-    val backlog = dataBatches(legs.market).map { p =>
-      val c = commitNs(p)
-      val appended = java.util.Arrays.binarySearch(due, c) match {
-        case i if i >= 0 => i + 1
-        case i => -i - 1
-      }
-      (appended - offsets(p)._2).toDouble
-    }
-    r.metric("sources.backlog_frames", if (backlog.isEmpty) 0.0 else backlog.max, "count")
+    val timed = backlog.filter(_._1 > 0).map(_._3)
+    r.metric("sources.backlog_frames", if (timed.isEmpty) 0.0 else timed.max, "count")
     val finals = legs.all.flatMap(q => dataBatches(q).lastOption).flatMap(_.stateOperators)
     r.metric("streaming.state_rows", finals.map(_.numRowsTotal.toDouble).sum, "count")
     r.metric("streaming.state_bytes", finals.map(_.memoryUsedBytes.toDouble).sum, "bytes")

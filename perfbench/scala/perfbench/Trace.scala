@@ -2,9 +2,11 @@ package perfbench
 
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.QueryPlanningTracker
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.datasources.v2.OverwriteByExpressionExec
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.util.QueryExecutionListener
 import scala.collection.mutable
@@ -18,30 +20,33 @@ final case class Span(id: Int, parent: Int, op: String, layer: String, name: Str
   * since the listener was installed; [[Trace.spark]] diffs two snapshots. */
 final case class SparkCounts(jobs: Long, stages: Long, tasks: Long, gcMs: Long,
     spillBytes: Long, shuffleReadBytes: Long, shuffleWriteBytes: Long,
-    inputRecords: Long, inputBytes: Long, finalExchanges: Long) {
+    inputRecords: Long, inputBytes: Long, finalExchanges: Long, planMs: Long) {
   def -(o: SparkCounts): SparkCounts = SparkCounts(jobs - o.jobs, stages - o.stages,
     tasks - o.tasks, gcMs - o.gcMs, spillBytes - o.spillBytes,
     shuffleReadBytes - o.shuffleReadBytes, shuffleWriteBytes - o.shuffleWriteBytes,
     inputRecords - o.inputRecords, inputBytes - o.inputBytes,
-    finalExchanges - o.finalExchanges)
+    finalExchanges - o.finalExchanges, planMs - o.planMs)
 
-  /** By the names the per-layer metrics use (GC in seconds). */
+  /** By the names the per-layer metrics use (GC and planning in seconds). */
   def toMap: Map[String, Double] = Map[String, Double]("jobs" -> jobs, "stages" -> stages,
     "tasks" -> tasks, "gc_s" -> gcMs / 1000.0, "spill_bytes" -> spillBytes,
     "shuffle_read_bytes" -> shuffleReadBytes, "shuffle_write_bytes" -> shuffleWriteBytes,
     "input_records" -> inputRecords, "input_bytes" -> inputBytes,
-    "final_exchanges" -> finalExchanges)
+    "final_exchanges" -> finalExchanges, "plan_s" -> planMs / 1000.0)
 }
 
 /** The traced run's recorder: spans kept in memory and written out with
   * the result, plus a SparkListener and a QueryExecutionListener that
-  * count jobs, stages, tasks, GC, spill, shuffle and input bytes, and the
-  * exchanges of each executed query's final (AQE) plan. Installed only on
-  * traced runs, so the untraced run measures the program alone. */
+  * count jobs, stages, tasks, GC, spill, shuffle and input bytes, the
+  * exchanges of each executed query's final (AQE) plan, and the planning
+  * time (optimization + physical planning) of the benchmark's `noop`
+  * writes, read from the executing QueryExecution's own tracker so nothing
+  * is planned twice. Installed only on traced runs, so the untraced run
+  * measures the program alone. */
 final class Trace(spark: SparkSession) {
   private val spans = mutable.ArrayBuffer.empty[Span]
   private var nextId = 0
-  private val c = Array.fill(10)(new AtomicLong)
+  private val c = Array.fill(11)(new AtomicLong)
 
   private val listener = new SparkListener {
     override def onJobStart(e: SparkListenerJobStart): Unit = c(0).incrementAndGet()
@@ -60,8 +65,10 @@ final class Trace(spark: SparkSession) {
     }
   }
   private val qeListener = new QueryExecutionListener {
-    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
       c(9).addAndGet(Trace.exchanges(qe.executedPlan))
+      if (qe.executedPlan.isInstanceOf[OverwriteByExpressionExec]) c(10).addAndGet(Trace.planningMs(qe))
+    }
     override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
   }
 
@@ -78,7 +85,7 @@ final class Trace(spark: SparkSession) {
   def snapshot(): SparkCounts = {
     org.apache.spark.PerfbenchBridge.drainListenerBus(spark.sparkContext)
     val v = c.map(_.get)
-    SparkCounts(v(0), v(1), v(2), v(3), v(4), v(5), v(6), v(7), v(8), v(9))
+    SparkCounts(v(0), v(1), v(2), v(3), v(4), v(5), v(6), v(7), v(8), v(9), v(10))
   }
 
   /** Runs `body` inside a span and returns its result with the span;
@@ -105,9 +112,12 @@ object Trace {
     case other => other.children.map(exchanges).sum + other.subqueries.map(exchanges).sum
   }
 
-  /** The classic-engine QueryExecution of a DataFrame. */
-  def queryExecution(df: DataFrame): QueryExecution =
-    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution
+  /** Optimization plus physical planning of an execution, in ms. */
+  def planningMs(qe: QueryExecution): Long = {
+    val phases = qe.tracker.phases
+    Seq(QueryPlanningTracker.OPTIMIZATION, QueryPlanningTracker.PLANNING)
+      .flatMap(phases.get).map(_.durationMs).sum
+  }
 
   def spanJson(s: Span, origin: Long): Map[String, Any] = Map(
     "id" -> s.id, "parent" -> s.parent, "op" -> s.op, "layer" -> s.layer, "name" -> s.name,
