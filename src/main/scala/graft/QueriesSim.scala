@@ -2523,10 +2523,10 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
       GraphAnn.buildGraph(Tables.embeddings(s, dir)))
 
   /** Embeddings for the graph SERVING paths: a raw scan WITHOUT the
-    * Tables fan-out repartition. Serving re-reads the corpus in every
-    * hop's checkpoint job only to probe ≤ef·|Q| candidates — locally
-    * that side ends in a BroadcastExchange, so the fan-out exchange
-    * under it is pure waste (the Tables scaladoc's own criterion), and
+    * Tables fan-out repartition. The beam walk hash-partitions the
+    * corpus by node itself, and the ADC walk reads vectors only for its
+    * queries, entry points and final re-rank, so a fan-out exchange
+    * under either is pure waste (the Tables scaladoc's own criterion);
     * at scale the scan carries its own parallelism. The BUILD path
     * (graphNswAll) keeps the fan-out: NN-Descent scoring is heavy
     * per-row compute over the whole corpus, exactly what it is for.
@@ -2563,9 +2563,9 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
 
   /** Beam-served top-k over the persisted graph (the sim_*_topk
     * contract: queries = every 20th vector, k=10). Serving reads ONLY
-    * the stored adjacency + vectors; each hop is one equi-join of the
-    * ≤ef·|Q| frontier against the distributed graph — the 100 TB
-    * shape. */
+    * the stored adjacency + vectors; each hop is one Spark job over the
+    * node-partitioned graph, its per-partition top-ef merged on the
+    * driver. */
   protected val simGraphTopk = Q("sim_graph_topk",
     (s, dir) => GraphAnn.graphTopK(embServe(s, dir),
       graphNswAll(s, dir), k = 10, stride = 20),

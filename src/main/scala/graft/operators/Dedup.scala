@@ -4,6 +4,7 @@ import graft.functions.TextFns
 import graft.plans.Stage
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftBridge.freeCheckpointBlocks
 
 /** Deduplication family for the training-data pipeline extensions
   * (SURVEY.md §2.10): exact, MinHash-LSH near-dup, SimHash, n-gram Jaccard
@@ -699,9 +700,11 @@ object Dedup {
     // LAZY lineage cuts throughout (r16 second pass): every checkpointed
     // frame here is forced by an action in the SAME iteration (the init
     // aggregate by the first neighbor-min join, `next` by the convergence
-    // count), so eager=false materializes it inside that action's job
-    // instead of a dedicated job per cut — one scheduled job per
-    // iteration instead of two, same lineage truncation, same caching.
+    // count), so eager=false computes its final stage inside that
+    // action's job instead of a dedicated job per cut. Under AQE that is
+    // the only job it saves: building the cut still calls
+    // `physicalPlan.execute()`, which runs the frame's shuffle-map and
+    // broadcast stages as jobs of their own right there.
     // Cut the pair lineage BEFORE the symmetrizing union (r17): the union
     // references `pairs` twice, and when pairs is a composed near-dup
     // pipeline (banded join + in-join verify + distinct) the second branch
@@ -723,6 +726,10 @@ object Dedup {
       .agg(min(col("doc_b")).as("mn"))
       .select(col("node"), least(col("node"), col("mn")).as("label"))
       .localCheckpoint(eager = false)
+    // the cut behind `labels`; released once the next round is counted
+    // (Dataset.unpersist only consults the CacheManager, which never
+    // holds a local checkpoint)
+    var cut = labels
     var iter = 1
     var converged = false
     while (iter < maxIters && !converged) {
@@ -740,12 +747,14 @@ object Dedup {
           least(col("prev"), coalesce(col("nbr_label"), col("prev"))).as("label"))
         .localCheckpoint(eager = false)
       val changed = next.where(col("label") =!= col("prev")).count()
-      labels.unpersist()
+      freeCheckpointBlocks(cut)
+      cut = next
       labels = next.select(col("node"), col("label"))
       converged = changed == 0
       iter += 1
     }
-    edges.unpersist()
+    freeCheckpointBlocks(p0)
+    freeCheckpointBlocks(edges)
     // A component with diameter > maxIters would return labels that are not
     // the component minimum — refuse to emit a silently-wrong clustering.
     if (!converged) throw new IllegalStateException(

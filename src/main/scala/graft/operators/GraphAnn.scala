@@ -1,11 +1,14 @@
 package graft.operators
 
 import graft.functions.SimFns._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.commons.codec.digest.DigestUtils
+import org.apache.spark.HashPartitioner
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
-/** Graph-based ANN (the NSW family), Spark-native (SURVEY.md §2.17).
+/** Graph-based ANN (the NSW family), Spark-native (SURVEY.md §2.18).
   *
   * HNSW-proper is built by SEQUENTIAL data-dependent inserts — each
   * vector's entry point depends on every earlier insert — which has no
@@ -26,11 +29,15 @@ import org.apache.spark.sql.functions._
   *    U ∪ (U ⋈ U) where U = E ∪ reverse(E); per-src top-K by
   *    (round-4 cosine DESC, dst). Candidate volume is N·(2K)² per
   *    round — linear in N, bounded per node;
-  *  - '''serving''': multi-entry unrolled BEAM search, `hops` fixed
-  *    expansion steps: pool ← top-ef(pool ∪ score(pool ⋈ G)) per
-  *    query. The frontier is |Q|·ef rows (broadcastable); the graph
-  *    and vector tables stay partitioned and are probed by equi-join —
-  *    at 100 TB each hop is one hash join however large the corpus.
+  *  - '''serving''': multi-entry BEAM search, `hops` fixed expansion
+  *    steps: pool ← top-ef(pool ∪ score(pool ⋈ G)) per query, run as
+  *    ONE Spark job per hop. The walk partitions each node's vector and
+  *    in-edges by node once; each hop broadcasts the |Q|·ef pool, every
+  *    partition expands and scores the candidates it owns and keeps its
+  *    top-ef per query, and the driver merges those partials with the
+  *    previous pool (REPOSE-style local top-k + global merge; exact
+  *    because a node lives in one partition). Graph and vectors never
+  *    move after the first shuffle, however large the corpus.
   *    Entry points are the `nEntries` smallest nodes in
   *    (md5(vec_id), vec_id) order — a deterministic pseudo-random
   *    spread, the distributed stand-in for HNSW's top-layer descent.
@@ -180,14 +187,16 @@ object GraphAnn {
       .limit(nEntries)
       .select(col("vec_id"), col("v"), col("nrm"))
 
-  /** Unrolled multi-entry beam search over a prebuilt graph:
-    * `queries` must carry (query_id, qv, qnrm); returns the standard
-    * sim contract (query_id, rank, neighbor_id, cosine), self-pairs
-    * excluded at the final rank (the query's own node stays in the
-    * pool mid-walk — it is a useful router). Each hop expands the
-    * whole ≤ef pool through the adjacency (DiskANN-style beam, not
-    * best-first: monotone pool growth keeps the unrolled plan — and
-    * the oracle — free of visited-set anti-joins). */
+  /** Multi-entry beam search over a prebuilt graph: `queries` must
+    * carry (query_id, qv, qnrm); returns the standard sim contract
+    * (query_id, rank, neighbor_id, cosine), self-pairs excluded at the
+    * final rank (the query's own node stays in the pool mid-walk — it
+    * is a useful router). Each hop expands the whole ≤ef pool through
+    * the adjacency (DiskANN-style beam, not best-first: monotone pool
+    * growth keeps the walk — and the unrolled oracle — free of visited
+    * sets). The walk runs when this is called (one job per hop); the
+    * returned frame holds the ranked rows. Node ids are unique BIGINTs
+    * in `corpus`, and every vector has the same length. */
   def beamSearch(graph: DataFrame, corpus: DataFrame, queries: DataFrame,
       k: Int, ef: Int = Ef, hops: Int = Hops,
       nEntries: Int = NEntries): DataFrame =
@@ -223,103 +232,124 @@ object GraphAnn {
   private def beamCore(graph: DataFrame, corpus: DataFrame,
       queries: DataFrame, k: Int, ef: Int, hops: Int, nEntries: Int,
       matchIds: Option[DataFrame], excludeSelf: Boolean): DataFrame = {
-    val n = corpus.select(col("vec_id"), col("v"), col("nrm"))
-      .where(col("nrm") > 0)
-    // The query side is ≤|Q| rows by construction and is re-read by a
-    // broadcast build in EVERY hop's checkpoint job — without a cut each
-    // of those builds re-runs the whole query-prep lineage (scan +
-    // fan-out exchange + norm projection). One materialization serves
-    // all hops (guide §2.4: remove repeated work feeding each exchange).
-    val q = queries.where(col("qnrm") > 0).localCheckpoint(eager = false)
-    val mset = matchIds.map(m =>
-      broadcast(m.select(col("vec_id").as("node")).distinct()))
-    // ONE exchange per cap (guide §2.4): pre-partition by query_id —
-    // hashpartitioning(query_id) satisfies the clustered distribution of
-    // BOTH the (query_id, node) dedup aggregate and the query_id rank
-    // window, so agg + sort + window + filter all run in that single
-    // shuffle's stage (was: one exchange for the aggregate keyed
-    // (query_id, node), then a second re-keying to query_id for the
-    // window). AQE coalesces the tiny partitions.
-    def capped(pool: DataFrame): DataFrame = {
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("cosine").desc, col("node"))
-      pool.repartition(col("query_id"))
-        .groupBy(col("query_id"), col("node"))
-        .agg(min(col("cosine")).as("cosine"))
-        .withColumn("rnk", row_number().over(w)).where(col("rnk") <= ef)
-        .select(col("query_id"), col("node"), col("cosine"))
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    val sc = spark.sparkContext
+    // query side (≤|Q| rows) and filter ids: collected once per walk
+    val qs = queries.where(col("qnrm") > 0)
+      .select(col("query_id"), col("qv"), col("qnrm"))
+      .as[(Long, Array[Double], Double)].collect()
+    val matchSet = matchIds.map(_.select(col("vec_id")).as[Long].collect().toSet)
+    // The walk's shards, built once and read by every hop: each node's
+    // vector AND its in-edges (src → local dsts) land in the node's hash
+    // partition, so a hop's candidates are born where they are scored —
+    // one single-stage job per hop, no per-hop shuffle.
+    val parts = new HashPartitioner(sc.defaultParallelism)
+    val vecs = corpus.where(col("nrm") > 0)
+      .select(col("vec_id"), col("v"), col("nrm"))
+      .as[(Long, Array[Double], Double)].rdd
+      .map { case (id, v, nrm) => (id, (v, nrm)) }.partitionBy(parts)
+    val inEdges = graph.select(col("dst"), col("src")).as[(Long, Long)].rdd
+      .partitionBy(parts)
+    val shards = vecs.zipPartitions(inEdges) { (vit, eit) =>
+      Iterator((mutable.LongMap.from(vit), eit.toArray.groupMap(_._2)(_._1)))
+    }.persist()
+    val qb = sc.broadcast(qs)
+    val mb = sc.broadcast(matchSet)
+    try {
+      // entry points: the job that also materializes the shards; hop 0
+      // scores them against every query on the driver
+      val entries = smallestEntries(shards.mapPartitions(it =>
+        smallestEntries(it.next()._1.iterator, nEntries).iterator)
+        .collect().iterator, nEntries)
+      val scored0 = qs.map { case (_, qv, qn) =>
+        entries.map { case (id, (v, nrm)) => id -> cosine4(qv, qn, v, nrm) } }
+      var pool = scored0.map(cap(_, ef))
+      // matched accumulator (filtered mode): PASSIVE, fed from the
+      // uncapped scorings, so a matching node the routing pool evicts
+      // still reaches the final rank
+      var acc = matchSet.map(m => scored0.map(c => cap(c.filter(e => m(e._1)), ef)))
+      for (_ <- 1 to hops if qs.nonEmpty) {
+        // the ≤|Q|·ef pool as node → query indices
+        val frontier = sc.broadcast(pool.zipWithIndex
+          .flatMap { case (p, qi) => p.map(e => e._1 -> qi) }
+          .groupMap(_._1)(_._2))
+        // one job: every shard expands the frontier through its in-edges,
+        // scores each (query, local node) once, and keeps each query's
+        // top-ef (and its matched top-ef)
+        val partial = shards.mapPartitions { it =>
+          val (vec, in) = it.next()
+          val byQ = mutable.LongMap.empty[mutable.LongMap[Double]]
+          for ((src, qis) <- frontier.value; dsts <- in.get(src); d <- dsts;
+               (v, nrm) <- vec.get(d); qi <- qis) {
+            val scored = byQ.getOrElseUpdate(qi, mutable.LongMap.empty)
+            if (!scored.contains(d)) {
+              val (_, qv, qn) = qb.value(qi)
+              scored(d) = cosine4(qv, qn, v, nrm)
+            }
+          }
+          byQ.iterator.map { case (qi, c) =>
+            (qi.toInt, cap(c, ef), mb.value.map(m => cap(c.filter(e => m(e._1)), ef)))
+          }
+        }.collect()
+        frontier.destroy()
+        // driver merge: top-ef(A ∪ B) = top-ef(top-ef(A) ∪ top-ef(B))
+        // because each node lives in exactly one partition
+        val byQ = partial.groupBy(_._1)
+        pool = pool.zipWithIndex.map { case (p, qi) =>
+          cap(p ++ byQ.getOrElse(qi, Array.empty).flatMap(_._2), ef) }
+        acc = acc.map(_.zipWithIndex.map { case (p, qi) =>
+          cap(p ++ byQ.getOrElse(qi, Array.empty).flatMap(_._3.get), ef) })
+      }
+      // self-exclusion and the final rank-k, on the driver
+      val out = acc.getOrElse(pool)
+      qs.indices.flatMap { qi =>
+        val qid = qs(qi)._1
+        out(qi).iterator.filter(e => !excludeSelf || e._1 != qid).take(k)
+          .zipWithIndex.map { case ((node, c), r) => (qid, r + 1, node, c) }
+      }.toDF("query_id", "rank", "neighbor_id", "cosine")
+    } finally {
+      shards.unpersist(blocking = false)
+      qb.destroy()
+      mb.destroy()
     }
-    def scoreNodes(cand: DataFrame): DataFrame =
-      cand.join(n.select(col("vec_id").as("node"), col("v"), col("nrm")), "node")
-        .join(broadcast(q), "query_id")
-        .select(col("query_id"), col("node"),
-          round(cosinePrenormed(dot(col("qv"), col("v")),
-            col("qnrm"), col("nrm")), 4).as("cosine"))
-    def matched(scored: DataFrame): DataFrame =
-      mset.map(m => scored.join(m, Seq("node"), "leftsemi")).getOrElse(scored)
-    // Each hop references the pool TWICE (expand + union): without a
-    // lineage cut the plan tree doubles per hop — 2^hops copies of the
-    // entry scoring, measured 13 s → 21 s → 44 s for hops 3/4/5 at
-    // sf0.1. localCheckpoint materializes the ≤|Q|·ef-row pool (tiny by
-    // construction) and truncates the lineage, making serving O(hops).
-    // At cluster scale the same cut is a reliable checkpoint or a
-    // persisted intermediate table — the standard iterative-algorithm
-    // posture.
-    // scored0 is consumed once in unfiltered mode (by the first cap) —
-    // checkpoint it only when the matched accumulator references it too.
-    val scored0raw = scoreNodes(
-      q.select(col("query_id"))
-        .crossJoin(broadcast(entryPoints(n, nEntries).select(col("vec_id").as("node")))))
-    // LAZY checkpoints throughout the walk (r16, second pass): the cut
-    // exists for LINEAGE (the plan tree doubles per hop), not for
-    // scheduling — eager cuts ran one materialization job per hop plus
-    // the next hop's broadcast-build job re-reading it (2 jobs/hop of
-    // pure overhead on ≤|Q|·ef rows, ~0.4 s/hop warm at sf0.1, gprof3).
-    // eager=false truncates the plan identically while the RDD
-    // materializes once, cached, inside the next consumer's own job —
-    // the per-hop scheduling overhead collapses into the broadcast
-    // builds the walk already pays.
-    val scored0 = if (mset.isEmpty) scored0raw
-      else scored0raw.localCheckpoint(eager = false)
-    var pool = capped(scored0).localCheckpoint(eager = false)
-    // Matched-result accumulator (filtered mode only): fed from the
-    // UNCAPPED per-hop scorings, so a matching node the routing pool
-    // evicts still reaches the final rank. PASSIVE (feeds nothing back
-    // into the walk) ⇒ one end-of-walk cap returns the identical set
-    // (top-k(top-k(A) ∪ B) = top-k(A ∪ B)) with hops fewer window
-    // stages; the union is bounded per query (hops·ef·degree rows) at
-    // any corpus size.
-    var matchedAcc = if (mset.isEmpty) None else Some(matched(scored0))
-    for (_ <- 1 to hops) {
-      // BROADCAST the ≤|Q|·ef frontier into the adjacency probe — the
-      // documented 100 TB shape made explicit (guide §3.1): the graph
-      // stays partitioned and is probed by a broadcast hash join, no
-      // exchange of graph bytes whatever the corpus size. The per-hop
-      // dedup `.distinct()` this replaces bought almost nothing
-      // (measured 41k → 39.6k rows at sf0.1) and cost an exchange +
-      // two aggregates per hop: duplicate (query_id, node) candidates
-      // score to the SAME deterministic cosine and collapse in the
-      // cap's (query_id, node) aggregate, so results are identical.
-      val expand = graph.select(col("src"), col("dst"))
-        .join(broadcast(pool.select(col("query_id"), col("node").as("src"))), "src")
-        .select(col("query_id"), col("dst").as("node"))
-      // the per-hop scoring is referenced twice only in filtered mode
-      // (routing pool + matched accumulator) — checkpoint it there;
-      // unfiltered serving consumes it once and skips the extra
-      // materialization
-      val scored = if (mset.isEmpty) scoreNodes(expand)
-        else scoreNodes(expand).localCheckpoint(eager = false)
-      pool = capped(pool.unionByName(scored)).localCheckpoint(eager = false)
-      matchedAcc = matchedAcc.map(_.unionByName(matched(scored)))
-    }
-    val outPool = matchedAcc.map(capped).getOrElse(pool)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("node"))
-    val base = if (excludeSelf) outPool.where(col("node") =!= col("query_id"))
-      else outPool
-    base.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-      .select(col("query_id"), col("rank"),
-        col("node").as("neighbor_id"), col("cosine"))
+  }
+
+  /** The `n` smallest (node, vector) entries in (md5(vec_id-as-string),
+    * vec_id) order — [[entryPoints]]' order, kept on each partition and
+    * again over the collected partials. */
+  private def smallestEntries[V](it: Iterator[(Long, V)], n: Int): Array[(Long, V)] =
+    it.map(e => (DigestUtils.md5Hex(e._1.toString), e)).toArray
+      .sortBy(x => (x._1, x._2._1)).take(n).map(_._2)
+
+  /** Round-4 cosine of a prenormed pair, bit-identical to Spark's
+    * `round(cosinePrenormed(dot(a, b), na, nb), 4)`: index-order dot
+    * ([[graft.plans.DotProductD]]), one division, then Round's
+    * BigDecimal HALF_UP over the double's shortest decimal form (NaN and
+    * infinities pass through). Vectors are equal-length by contract
+    * (every caller's corpus and queries come through [[prepped]]). */
+  private[graft] def cosine4(a: Array[Double], na: Double, b: Array[Double],
+      nb: Double): Double = {
+    var acc = 0.0
+    var i = 0
+    while (i < a.length) { acc += a(i) * b(i); i += 1 }
+    val c = acc / (na * nb)
+    if (c.isNaN || c.isInfinite) c
+    else java.math.BigDecimal.valueOf(c)
+      .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
+  }
+
+  /** One query's pool cap, the walk's only ranking rule: min cosine per
+    * node, then the first `ef` by (cosine DESC, node) under Spark's
+    * double order (NaN above every number). */
+  private[graft] def cap(cands: Iterable[(Long, Double)], ef: Int): Array[(Long, Double)] = {
+    def cmp(x: Double, y: Double): Int =
+      if (x == y) 0 else java.lang.Double.compare(x, y)
+    val best = mutable.LongMap.empty[Double]
+    for ((node, c) <- cands)
+      if (best.get(node).forall(b => cmp(c, b) < 0)) best(node) = c
+    best.toArray.sortWith { case ((n1, c1), (n2, c2)) =>
+      val o = cmp(c1, c2); if (o != 0) o > 0 else n1 < n2 }.take(ef)
   }
 
   /** Self-join convenience (the sim_*_topk contract): queries are the
@@ -410,9 +440,9 @@ object GraphAnn {
       cand.join(codes, "node").join(lutW, "query_id")
         .select(col("query_id"), col("node"),
           adcSum(col("codes"), col("lut"), ksub).as("d2u"))
-    // single-exchange cap — same reasoning as beamCore's capped():
-    // hashpartitioning(query_id) satisfies both the (query_id, node)
-    // dedup aggregate and the rank window, so one shuffle serves both.
+    // single-exchange cap: hashpartitioning(query_id) satisfies both
+    // the (query_id, node) dedup aggregate and the rank window, so one
+    // shuffle serves both.
     def capAt(limit: Int)(pool: DataFrame): DataFrame = {
       val w = Window.partitionBy(col("query_id"))
         .orderBy(col("d2u").asc_nulls_last, col("node"))
@@ -433,8 +463,10 @@ object GraphAnn {
     // end-of-walk cap over the unioned per-hop scorings returns the
     // identical set with hops fewer window stages; the union stays
     // bounded per query (hops·ef·degree rows) at ANY corpus size.
-    // lazy checkpoints — same reasoning as beamCore's walk: the cut is
-    // for lineage, the materialization rides inside the consumers' jobs
+    // Lazy checkpoints: each hop references the pool twice (expand +
+    // union), so without a cut the plan tree doubles per hop. Under AQE
+    // a lazy cut still runs its shuffle and broadcast stages when built;
+    // only its final stage rides inside the consumer's job.
     val scored0 = scoreAdc(
       q.select(col("query_id"))
         .crossJoin(broadcast(entryPoints(n, nEntries).select(col("vec_id").as("node")))))
@@ -442,10 +474,9 @@ object GraphAnn {
     var pool = capAt(ef)(scored0).localCheckpoint(eager = false)
     var shortAcc = scored0
     for (_ <- 1 to hops) {
-      // broadcast frontier + no per-hop distinct — same reasoning (and
-      // identical-results argument) as beamCore's expand: duplicate
-      // (query_id, node) candidates carry the same deterministic d2u
-      // and collapse in the caps' (query_id, node) aggregates.
+      // broadcast frontier, no per-hop distinct: duplicate (query_id,
+      // node) candidates carry the same deterministic d2u and collapse
+      // in the caps' (query_id, node) aggregates.
       val expand = graph.select(col("src"), col("dst"))
         .join(broadcast(pool.select(col("query_id"), col("node").as("src"))), "src")
         .select(col("query_id"), col("dst").as("node"))

@@ -90,6 +90,66 @@ class GraphAnnSpec extends AnyFunSuite {
     assert(g == b)
   }
 
+  test("distributed walk == a single-machine reference walk where the " +
+      "per-partition caps bind (small ef)") {
+    // the capped-hop semantics in plain Scala, per query:
+    // pool ← cap(pool ∪ score(expand(pool))), entry points from Spark's
+    // own (md5(vec_id), vec_id) order
+    import spark.implicits._
+    val ef = 6
+    val vecs = emb.select("vec_id", "embedding").as[(Long, Array[Float])]
+      .collect().map { case (id, e) =>
+        val v = e.map(_.toDouble)
+        id -> (v, math.sqrt(v.foldLeft(0.0)((acc, x) => acc + x * x)))
+      }.filter(_._2._2 > 0).toMap
+    val adj = graph.select("src", "dst").as[(Long, Long)].collect()
+      .groupMap(_._1)(_._2)
+    val entries = emb.select("vec_id")
+      .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
+      .as[Long].collect().filter(vecs.contains).take(GraphAnn.NEntries)
+    val expected = vecs.keys.filter(_ % 20 == 0).toSeq.flatMap { q =>
+      val (qv, qn) = vecs(q)
+      def score(ids: Iterable[Long]) = ids.filter(vecs.contains)
+        .map(d => d -> GraphAnn.cosine4(qv, qn, vecs(d)._1, vecs(d)._2))
+      def expand(p: Array[(Long, Double)]) =
+        p.flatMap(e => adj.getOrElse(e._1, Array.empty[Long]))
+      val pool = (1 to GraphAnn.Hops).foldLeft(GraphAnn.cap(score(entries), ef)) {
+        (p, _) => GraphAnn.cap(p ++ score(expand(p)), ef)
+      }
+      pool.filter(_._1 != q).take(10).zipWithIndex
+        .map { case ((d, c), r) => (q, r + 1, d, c) }
+    }.toSet
+    val served = GraphAnn.graphTopK(emb, graph, k = 10, stride = 20, ef = ef)
+      .as[(Long, Int, Long, Double)].collect().toSet
+    assert(served == expected)
+  }
+
+  test("serving cost: graphTopK runs at most Hops + 4 jobs and leaves no " +
+      "persisted RDD behind") {
+    import org.apache.spark.ListenerBusDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    graph.count() // the cached graph is built outside the counted window
+    val before = sc.getPersistentRDDs.keySet
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      // the walk (q collect, shard build, one job per hop) plus the
+      // collecting action
+      GraphAnn.graphTopK(emb, graph, k = 10, stride = 20).collect()
+      ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get <= GraphAnn.Hops + 4, s"${jobs.get} jobs")
+    // the same set, or a subset when the cleaner drops an older entry
+    val after = sc.getPersistentRDDs.keySet
+    assert((after -- before).isEmpty,
+      s"persisted RDDs before ${before.toSeq.sorted}, after ${after.toSeq.sorted}")
+  }
+
   test("filtered serving: matched-only results; exactness ladder vs " +
       "brute over the filtered corpus") {
     val n = emb.count().toInt

@@ -157,6 +157,18 @@ class DedupSpec extends AnyFunSuite {
     assert(clusters.values.toSet == Set(1L))
   }
 
+  test("components releases its lineage cuts: only the returned labels' " +
+      "cut stays persisted") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val clusters = Dedup.components(
+      Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("doc_a", "doc_b"))
+      .as[(Long, Long)].collect().toMap
+    assert(clusters == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L))
+    val kept = sc.getPersistentRDDs.keySet -- before
+    assert(kept.size == 1, s"persisted RDDs left behind: ${kept.toSeq.sorted}")
+  }
+
   test("qualitySurvivors: argmax-quality survivor per cluster, min-id tie-break") {
     // 1-2 near-dups, 1-4 exact dups → one cluster {1,2,4}. Doc 2 is made
     // the QUALITY winner (longer alpha-dense text than its siblings would

@@ -752,3 +752,90 @@ object TrigramProps extends Properties("TrigramsS") {
       out == expect
     }
 }
+
+/** The beam walk's executor-side scorer and driver merge
+  * ([[graft.operators.GraphAnn.cosine4]] / [[graft.operators.GraphAnn.cap]])
+  * against the Spark expressions they replace: the round-4 cosine column
+  * and the DataFrame pool cap (min per (query_id, node), then row_number
+  * by (cosine DESC, node) ≤ ef). Each case runs one small Spark query,
+  * so failures are reported unshrunk. */
+object GraphBeamProps extends Properties("GraphBeam") {
+  import graft.functions.SimFns.{cosinePrenormed, dot}
+  import graft.operators.GraphAnn
+  import org.apache.spark.sql.expressions.Window
+  import org.apache.spark.sql.functions._
+  import org.scalacheck.Prop.forAllNoShrink
+  import org.scalacheck.Test
+
+  override def overrideParameters(p: Test.Parameters): Test.Parameters =
+    p.withMinSuccessfulTests(30)
+
+  private lazy val spark = TestSpark.spark
+
+  private def norm(v: Array[Double]): Double = math.sqrt(v.map(x => x * x).sum)
+
+  // (a, b, na, nb): random 64-d pairs over a coarse value grid (so equal
+  // vectors, and with them exact cosine ties, recur), plus axis pairs
+  // whose cosine is a half-way point of the 4th decimal (k + 0.5)·1e-4
+  private val genVec: Gen[Array[Double]] =
+    Gen.listOfN(64, Gen.chooseNum(-4, 4).map(_ / 4.0)).map(_.toArray)
+      .suchThat(_.exists(_ != 0.0))
+  private val genPair: Gen[(Array[Double], Array[Double], Double, Double)] =
+    Gen.frequency(
+      3 -> (for { a <- genVec; b <- Gen.oneOf(genVec, Gen.const(a)) }
+        yield (a, b, norm(a), norm(b))),
+      2 -> Gen.chooseNum(-10000, 9999).map { k =>
+        val axis = Array.tabulate(64)(i => if (i == 0) 1.0 else 0.0)
+        ((k * 10 + 5) / 100000.0 +: Array.fill(63)(0.0), axis, 1.0, 1.0)
+      })
+
+  property("cosine4 == Spark's round(cosinePrenormed(dot(a, b), na, nb), 4), bit for bit") =
+    forAllNoShrink(Gen.nonEmptyListOf(genPair)) { pairs =>
+      val s = spark
+      import s.implicits._
+      val spark4 = pairs.toDF("a", "b", "na", "nb")
+        .select(round(cosinePrenormed(dot(col("a"), col("b")), col("na"), col("nb")), 4))
+        .as[Double].collect().toSeq
+      val ours = pairs.map { case (a, b, na, nb) => GraphAnn.cosine4(a, na, b, nb) }
+      ours.map(java.lang.Double.doubleToRawLongBits) ==
+        spark4.map(java.lang.Double.doubleToRawLongBits)
+    }
+
+  // One hop's merge: the previous pool plus the new candidates (with
+  // duplicates) of up to 4 queries over 30 nodes. Scores are a fixed
+  // function of (query, node), as the deterministic scorer guarantees,
+  // drawn from a small set so ties are common.
+  private val genHop = for {
+    nq <- Gen.choose(1, 4)
+    ef <- Gen.choose(1, 8)
+    nParts <- Gen.choose(1, 4)
+    table <- Gen.listOfN(nq * 30, Gen.oneOf(-1.0, -0.25, 0.0, 0.3333, 0.5, 0.5, 1.0))
+    prev <- Gen.listOf(Gen.zip(Gen.choose(0, nq - 1), Gen.choose(0L, 29L)))
+    cands <- Gen.listOf(Gen.zip(Gen.choose(0, nq - 1), Gen.choose(0L, 29L)))
+  } yield (nq, ef, nParts, table, prev, cands)
+
+  property("per-partition cap + driver merge == the DataFrame cap over " +
+      "pool ∪ candidates") =
+    forAllNoShrink(genHop) { case (nq, ef, nParts, table, prev, cands) =>
+      def scored(qn: (Int, Long)) = (qn._1, qn._2, table(qn._1 * 30 + qn._2.toInt))
+      val pool = (0 until nq).map(q =>
+        GraphAnn.cap(prev.filter(_._1 == q).map(e => scored(e)).map(e => e._2 -> e._3), ef))
+      val merged = (0 until nq).map { q =>
+        val partials = cands.filter(_._1 == q).map(scored)
+          .groupBy(e => e._2 % nParts).values
+          .flatMap(part => GraphAnn.cap(part.map(e => e._2 -> e._3), ef))
+        GraphAnn.cap(pool(q) ++ partials, ef).toSeq
+      }
+      val s = spark
+      import s.implicits._
+      val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("node"))
+      val union = pool.zipWithIndex.flatMap { case (p, q) => p.map(e => (q, e._1, e._2)) } ++
+        cands.map(scored)
+      val byDf = union.toDF("query_id", "node", "cosine")
+        .groupBy(col("query_id"), col("node")).agg(min(col("cosine")).as("cosine"))
+        .withColumn("rnk", row_number().over(w)).where(col("rnk") <= ef)
+        .as[(Int, Long, Double, Int)].collect().groupBy(_._1)
+        .map { case (q, rs) => q -> rs.sortBy(_._4).map(r => r._2 -> r._3).toSeq }
+      merged.zipWithIndex.forall { case (m, q) => m == byDf.getOrElse(q, Seq.empty) }
+    }
+}
