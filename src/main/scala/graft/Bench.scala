@@ -1,10 +1,24 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicReference
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.graftbridge.GraftBridge
+import org.apache.spark.sql.util.QueryExecutionListener
 
-/** Headline benchmark: runs the bench-flagged subset of the query inventory
-  * on SPARK_GRAFT_SF_DIR, prints one JSON line (driver contract). Queries
-  * are forced with a `count()` (no results pulled to the driver).
+/** Headline benchmark and the one timing tool:
+  * `runMain graft.Bench [q1,q2,...] [--trace] [--plans DIR]`.
+  * Runs the bench-flagged subset of the query inventory (or the named
+  * registry rows, in the given order) on SPARK_GRAFT_SF_DIR and prints two
+  * JSON lines (driver contract). Queries are forced with a `count()` (no
+  * results pulled to the driver).
+  *  - `--trace` prints, per measured rep, the jobs, stages, tasks, GC,
+  *    spill and shuffle bytes it scheduled ([[JobTrace]]).
+  *  - `--plans DIR` writes `DIR/<row>.txt`: the formatted plan of the
+  *    first measured rep's `count()` after it ran — AQE's final plan and
+  *    the initial (pre-execution) plan it started from.
   */
 object Bench {
 
@@ -25,17 +39,55 @@ object Bench {
     "text_stats", "text_top_terms", "sim_brute_topk", "sim_topk_agg",
     "sim_ivf_topk", "sim_lsh_topk")
 
+  /** Parsed command line: the rows to time, in order, and the two
+    * diagnostics. */
+  final case class Opts(rows: Seq[String], trace: Boolean, plansDir: Option[String])
+
+  private val Usage = "usage: graft.Bench [q1,q2,...] [--trace] [--plans DIR]"
+
+  /** Parses the command line; fails on an unknown flag or row name before
+    * any session starts. */
+  def parse(args: Seq[String]): Opts = {
+    def go(rest: List[String], o: Opts, list: Option[String]): Opts = rest match {
+      case Nil => o.copy(rows = rows(list))
+      case "--trace" :: tail => go(tail, o.copy(trace = true), list)
+      case "--plans" :: dir :: tail if !dir.startsWith("--") =>
+        go(tail, o.copy(plansDir = Some(dir)), list)
+      case a :: tail if !a.startsWith("--") && list.isEmpty => go(tail, o, Some(a))
+      case a :: _ => throw new IllegalArgumentException(s"unexpected argument '$a'; $Usage")
+    }
+    go(args.toList, Opts(Nil, trace = false, None), None)
+  }
+
+  /** The rows a run times: every bench row, or the registry rows of the
+    * comma-separated `list` in its order. Fails naming the first unknown
+    * row. */
+  def rows(list: Option[String]): Seq[String] = list match {
+    case None => Queries.benchNames
+    case Some(l) =>
+      val names = l.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+      require(names.nonEmpty, s"empty row list; $Usage")
+      names.find(n => !Queries.queries.contains(n)).foreach { n =>
+        throw new IllegalArgumentException(s"unknown row '$n'") }
+      names
+  }
+
   def main(args: Array[String]): Unit = {
+    val opts = parse(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
+    val trace = if (opts.trace) Some(JobTrace.attach(spark.sparkContext)) else None
+    // --plans: the QueryExecution of the last action to finish, which
+    // after a rep is that rep's `count()` (a row's build-time actions
+    // finish before it)
+    val lastQe = new AtomicReference[QueryExecution]
+    opts.plansDir.foreach { dir =>
+      new java.io.File(dir).mkdirs()
+      spark.listenerManager.register(new QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = lastQe.set(qe)
+        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      })
+    }
     // Untimed warmup at the smallest SF: identical plans → codegen compiles
     // and JIT warm before the measured pass (same data files are NOT read).
     // Warmup and measurement are INTERLEAVED per query, so each query's
@@ -83,7 +135,7 @@ object Bench {
         .split(" ").take(3).mkString("[", ",", "]")
       catch { case _: Throwable => "[]" }
     val loadStart = loadavg()
-    val results = Queries.benchNames.map { name =>
+    val results = opts.rows.map { name =>
       val fn = Queries.queries(name)
       try fn(spark, WarmupSfDir).count()
       catch { case t: Throwable =>
@@ -96,16 +148,27 @@ object Bench {
       var err: Option[String] = None
       val reps = scala.collection.mutable.ArrayBuffer.empty[Double]
       val nReps = repeats.max(extraReps.getOrElse(name, 0))
+      def rep(): Double = {
+        val t0 = System.nanoTime()
+        fn(spark, sfDir).count()
+        (System.nanoTime() - t0) / 1e9
+      }
       var i = 0
       while (i < nReps && err.isEmpty) {
-        val t0 = System.nanoTime()
         try {
-          fn(spark, sfDir).count()
-          val sec = (System.nanoTime() - t0) / 1e9
           // raw seconds, NOT rounded: `best` is min(reps), so the totals
           // line and the reps blob must agree to the last bit (ADVICE r14
           // — a ms-rounded rep could disagree with the reported min in
           // the final decimal)
+          val sec = trace match {
+            case Some(t) =>
+              val (sec, c) = t.measure(rep())
+              println(f"[trace] $name rep ${i + 1}: $sec%.3f s $c")
+              sec
+            case None => rep()
+          }
+          if (i == 0) opts.plansDir.foreach { dir =>
+            writePlan(spark.sparkContext, lastQe, s"$dir/$name.txt") }
           reps += sec
           best = math.min(best, sec)
           successes += 1
@@ -149,5 +212,71 @@ object Bench {
     println(s"""{"metric":"reps","reps":$repsJson,"loadavg":{"start":$loadStart,"end":$loadEnd},"repeats":$repeats,"sf":"$sfDir"}""")
     println(s"""{"metric":"total","value":$total,"unit":"sec","total_r1set":$totalR1,"queries":$qs,"errors":$errs,"repeats":$repeats,"agg":"min","loadavg":{"start":$loadStart,"end":$loadEnd},"sf":"$sfDir"}""")
     spark.stop()
+  }
+
+  /** Writes the executed action's formatted plan — AQE prints its final
+    * plan and the initial plan it started from. Raw control characters
+    * (some text rows' literals reach plan text) are escaped: one raw
+    * control byte makes grep treat the whole file as binary. */
+  private def writePlan(sc: SparkContext, lastQe: AtomicReference[QueryExecution],
+      path: String): Unit = {
+    GraftBridge.drainListenerBus(sc)
+    val plan = lastQe.get.explainString(FormattedMode).flatMap {
+      case c if c != '\n' && c != '\t' && c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    }
+    Files.writeString(Paths.get(path), plan)
+  }
+}
+
+/** One SparkListener counting what the actions inside [[measure]]
+  * scheduled: jobs, completed stages and their tasks, and those stages'
+  * GC time, spill bytes (memory + disk) and shuffle read/write bytes.
+  * [[measure]] drains the listener bus before and after its body, so the
+  * counts are complete as soon as the body's action has returned. */
+final class JobTrace private (sc: SparkContext) extends SparkListener {
+  private var c = JobTrace.Counts()
+
+  override def onJobStart(e: SparkListenerJobStart): Unit =
+    synchronized { c = c.copy(jobs = c.jobs + 1) }
+
+  override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+    val si = e.stageInfo
+    c = c.copy(stages = c.stages + 1, tasks = c.tasks + si.numTasks)
+    Option(si.taskMetrics).foreach { m =>
+      c = c.copy(gcMs = c.gcMs + m.jvmGCTime,
+        spillBytes = c.spillBytes + m.memoryBytesSpilled + m.diskBytesSpilled,
+        shuffleReadBytes = c.shuffleReadBytes + m.shuffleReadMetrics.totalBytesRead,
+        shuffleWriteBytes = c.shuffleWriteBytes + m.shuffleWriteMetrics.bytesWritten)
+    }
+  }
+
+  /** Runs `body` and returns its result with the counts of what it
+    * scheduled. */
+  def measure[T](body: => T): (T, JobTrace.Counts) = {
+    GraftBridge.drainListenerBus(sc)
+    synchronized { c = JobTrace.Counts() }
+    val out = body
+    GraftBridge.drainListenerBus(sc)
+    (out, synchronized(c))
+  }
+
+  def detach(): Unit = sc.removeSparkListener(this)
+}
+
+object JobTrace {
+  final case class Counts(jobs: Int = 0, stages: Int = 0, tasks: Int = 0,
+      gcMs: Long = 0, spillBytes: Long = 0, shuffleReadBytes: Long = 0,
+      shuffleWriteBytes: Long = 0) {
+    override def toString: String =
+      s"jobs=$jobs stages=$stages tasks=$tasks gc_ms=$gcMs spill_bytes=$spillBytes " +
+        s"shuffle_read_bytes=$shuffleReadBytes shuffle_write_bytes=$shuffleWriteBytes"
+  }
+
+  /** Registers a new trace on `sc`'s listener bus. */
+  def attach(sc: SparkContext): JobTrace = {
+    val t = new JobTrace(sc)
+    sc.addSparkListener(t)
+    t
   }
 }

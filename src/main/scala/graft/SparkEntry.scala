@@ -8,6 +8,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SparkEntry {
 
+  /** The session Bench, Verify and Smoke run on: `local[$SPARK_GRAFT_CPUS]`
+    * (default 4) with as many shuffle partitions, UTC session time zone,
+    * AQE on, no UI, WARN logging. [[graft.plans.GraftExtensions]] is not
+    * installed: its rules would change the plans Verify dumps and Bench
+    * times. */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Flagship query (SURVEY.md §2.5): the reference's 4-level flatten as one
     * DataFrame statement, on sf0.001 — over the persisted nested fixture
     * (production shape; first call materializes it once).

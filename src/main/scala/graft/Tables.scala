@@ -13,22 +13,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * [[graft.functions.TimeFns.nanosToTimestamp]].
   */
 object Tables {
-  /** The driver's tables are single-file, single-row-group parquet, so the
-    * file scan is one task no matter what `maxPartitionBytes` says (a row
-    * group is the atomic split unit) — and every narrow pipeline above it
-    * would run on one core. When the scan's planned parallelism is below
-    * the session's, fan out with one cheap round-robin exchange (tens of
-    * MB here). On a real many-file/many-row-group layout — the 100 TB case
-    * — the scan is already parallel and this is a no-op. */
   /** Memo of loaded table frames, keyed (session, path) — r16 session 2.
     * `spark.read.parquet` runs an eager footer/schema-inference job on
     * every call, so before this every query BUILD re-listed and re-read
     * the footers of every table it touches, once per bench repeat (1–4
-    * driver-visible jobs per row, measured in ProfileJobs). A DataFrame
-    * is an immutable plan — handing every caller the same instance
-    * changes no result and no execution; only the redundant metadata
-    * jobs disappear. Entries are per-session, so tests with fresh
-    * sessions and multi-sfDir runs stay isolated. */
+    * driver-visible jobs per row, measured by a per-row job trace:
+    * OPTIMIZATION_r16.md §11). A DataFrame is an immutable plan —
+    * handing every caller the same instance changes no result and no
+    * execution; only the redundant metadata jobs disappear. Entries are
+    * per-session, so tests with fresh sessions and multi-sfDir runs stay
+    * isolated. */
   private val memo =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
 
@@ -53,6 +47,10 @@ object Tables {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = normalizeTs(spark.read.parquet(path))
     val target = math.min(spark.sparkContext.defaultParallelism, 32)
+    // The driver's tables are single-file, single-row-group parquet, so
+    // the scan is one task whatever `maxPartitionBytes` says (a row group
+    // is the atomic split unit) and every narrow pipeline above it would
+    // run on one core; a scan planned below `target` partitions fans out.
     // Tiny dims (region/nation) stay single-partition — they broadcast
     // anyway, and a repartition exchange before a BroadcastExchange is
     // pure waste. The cutoff is bytes, not rows: even a small file (e.g.
@@ -70,13 +68,17 @@ object Tables {
     // a keyless repartition(n) first LOCALLY SORTS its whole input so task
     // retries reproduce the same row→partition map (SPARK-23207) — a full
     // sort + wide exchange of every scanned table, paid per query execution.
-    // Hashing the leading column (the natural key of every driver table:
+    // Hashing the leading column (the id column of every driver table:
     // l_orderkey, doc_id, event_id, vec_id, …) is deterministic per row, so
     // no sort is needed, retries are safe (guide §2.5 "derive the synthetic
     // key deterministically"), and downstream aggregates/joins keyed on the
     // same id reuse the fan-out partitioning outright (guide §2.4: two
-    // operations keyed the same way share one exchange). Keys are unique
-    // ids, so the hash spread is uniform — no skew risk at any SF.
+    // operations keyed the same way share one exchange). Keys are
+    // high-cardinality ids (l_orderkey has ~4 rows per key; the others are
+    // unique), so the hash spread is uniform — no skew risk at any SF.
+    // A keyed operator downstream that reuses this partitioning runs on
+    // `target` = min(defaultParallelism, 32) partitions, whatever
+    // spark.sql.shuffle.partitions says.
     if (!tiny && estScanParts < target)
       df.repartition(target, org.apache.spark.sql.functions.col(df.schema.head.name))
     else df

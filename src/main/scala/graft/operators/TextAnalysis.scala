@@ -117,8 +117,9 @@ object TextAnalysis {
     * small joins (unigram frame broadcast by AQE when small). */
   def collocations(documents: DataFrame, k: Int, minPairN: Long = 5): DataFrame = {
     // the unigram and bigram branches both consume the tokenize stage —
-    // checkpoint it once (PlanFinal showed 4 scans / 12 scan+generate
-    // nodes without it; ContextCleaner frees the blocks on GC)
+    // checkpoint it once (the r8 plan audit, NOTES.md, showed 4 scans /
+    // 12 scan+generate nodes without it; ContextCleaner frees the blocks
+    // on GC)
     val toks = Stage(documents.select(col("doc_id"), col("text")),
       "w", TextFns.tokens(col("text"))).drop("text").localCheckpoint(false)
     val uni = toks.select(explode(col("w")).as("token"))
@@ -1066,7 +1067,7 @@ object TextAnalysis {
     // fused native kernel (r16): hash + bucket + sign + fold in ONE pass
     // over the tokens — the per-token hash-struct transform plus the
     // dim×|tokens| fold it replaced was the hottest text HOF site
-    // (ProfileTextHof: 11.25 s → see NOTES r16). Bit-identical
+    // (r16 text-HOF profile: 11.25 s, NOTES.md r16). Bit-identical
     // ([[embedDocumentsHof]] kept for the parity suite).
     toks.select(col("doc_id"), TextFns.featEmbed(col("w"), dim).as("embedding"))
   }

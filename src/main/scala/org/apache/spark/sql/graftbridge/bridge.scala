@@ -47,4 +47,10 @@ object GraftBridge {
     * caller's session ever seeing them. */
   def cloneSession(spark: SparkSession): SparkSession =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+
+  /** Block until every event posted to the driver's listener bus so far
+    * has reached its listeners, so a listener's counts are complete when
+    * read (the bus is `private[spark]`). */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

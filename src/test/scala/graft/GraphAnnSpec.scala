@@ -70,8 +70,9 @@ class GraphAnnSpec extends AnyFunSuite {
     }
     val g = recallOf(GraphAnn.graphTopK(emb, graph, k = 10, stride = 20))
     val l = recallOf(Similarity.lshTopK(emb, k = 10, stride = 20))
-    // sweep-pinned config (ProfileGraph, sf0.1): graph 0.971; the floor
-    // leaves headroom for corpus regeneration, not for regressions
+    // sweep-pinned config (r16 36-config sweep, NOTES.md, sf0.1): graph
+    // 0.971; the floor leaves headroom for corpus regeneration, not for
+    // regressions
     assert(g >= 0.85, s"graph recall $g below floor")
     assert(g > l, s"graph recall $g not above LSH $l")
   }
@@ -126,24 +127,16 @@ class GraphAnnSpec extends AnyFunSuite {
 
   test("serving cost: graphTopK runs at most Hops + 4 jobs and leaves no " +
       "persisted RDD behind") {
-    import org.apache.spark.ListenerBusDrain
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
     graph.count() // the cached graph is built outside the counted window
     val before = sc.getPersistentRDDs.keySet
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try {
-      // the walk (q collect, shard build, one job per hop) plus the
-      // collecting action
-      GraphAnn.graphTopK(emb, graph, k = 10, stride = 20).collect()
-      ListenerBusDrain(sc)
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get <= GraphAnn.Hops + 4, s"${jobs.get} jobs")
+    val trace = JobTrace.attach(sc)
+    // the walk (q collect, shard build, one job per hop) plus the
+    // collecting action
+    val (_, c) = try trace.measure(
+      GraphAnn.graphTopK(emb, graph, k = 10, stride = 20).collect())
+    finally trace.detach()
+    assert(c.jobs <= GraphAnn.Hops + 4, s"${c.jobs} jobs")
     // the same set, or a subset when the cleaner drops an older entry
     val after = sc.getPersistentRDDs.keySet
     assert((after -- before).isEmpty,
